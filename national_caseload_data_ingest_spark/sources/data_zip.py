@@ -11,6 +11,10 @@ Spark-first re-expression of the reference's ``DataZip`` pipeline
    are read by one* ``spark.read.text`` *call* and processed in parallel —
    the reference loops districts sequentially
    (``/root/reference/ncd/normal_table.py:51-60``).
+   In local mode, listing those files (and, at query time, a table's
+   partition directories) is a plain in-process listing:
+   ``session.get_spark`` raises Spark's parallel-listing threshold there,
+   so no listing becomes a Spark job.
 2. Extract normal-table schemas from ``README.TXT`` (latin-1,
    ``/root/reference/ncd/data_zip.py:104-105``).
 3. For each normal table (sorted, A25): discover member files

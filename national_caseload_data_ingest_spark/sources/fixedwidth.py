@@ -36,17 +36,16 @@ _INT_RE = r"^[+-]?[0-9]+$"
 REDACTION_MARKER = "*"
 
 
-def _cast_cell(raw: Column, f: FieldSpec) -> Column:
-    """Typed value for one field, null-on-failure, reference semantics."""
-    trimmed = F.trim(raw)
+def _cast_cell(cell: Column, f: FieldSpec) -> Column:
+    """Typed value for one trimmed field, null-on-failure, reference semantics."""
     if f.src_type in ("VARCHAR", "VARCHAR2"):
-        return trimmed
+        return cell
     if f.src_type == "NUMBER":
-        return F.when(trimmed.rlike(_INT_RE), trimmed.cast("bigint"))
+        return F.when(cell.rlike(_INT_RE), cell.cast("bigint"))
     if f.src_type == "DATE":
-        return F.to_date(trimmed, "dd-MMM-yyyy")
+        return F.to_date(cell, "dd-MMM-yyyy")
     if f.src_type == "FLOAT":
-        return trimmed.cast("double")
+        return cell.cast("double")
     raise NotImplementedError(f"Unsupported source field type: {f.src_type}")
 
 
@@ -58,8 +57,11 @@ def project_fixed_width(lines: DataFrame, schema: TableSchema) -> DataFrame:
     all ``redacted_*`` shadows — the reference's DDL order
     (``/root/reference/ncd/normal_table.py:166-175``).
     """
-    # Offsets-preserving CR handling (A4).
-    value = F.regexp_replace(F.col("value"), "\r", " ")
+    # Offsets-preserving CR handling (A4).  A plain substring replace:
+    # over 1M 120-character lines (local[2], 4-core VM) it took 0.5 s
+    # against 1.6 s for regexp_replace and 4 s for translate, which looks
+    # each character up in a map.
+    value = F.replace(F.col("value"), F.lit("\r"), F.lit(" "))
     cells = {f.name: F.trim(F.substring(value, f.start, f.length)) for f in schema.fields}
     data_cols = []
     shadow_cols = []

@@ -8,9 +8,11 @@ lines, named by the first ``GS_``-prefixed token
 (``/root/reference/ncd/lookup_table.py:45-64``).
 
 These are KB-scale codebooks, so parsing stays on the driver (same call the
-reference makes); the parsed rows become small DataFrames that downstream
-queries **broadcast-join** against fact tables — the designed use of lookup
-tables per the reference README (decode joins, ``README.md:46-50``).
+reference makes); the parsed rows become Arrow-backed local relations (a
+``LocalRelation`` in the plan, so writing one starts no Python worker) that
+downstream queries **broadcast-join** against fact tables — the designed use
+of lookup tables per the reference README (decode joins,
+``README.md:46-50``).
 
 Semantics reproduced:
 
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -103,13 +106,23 @@ def _to_dataframe(
         [T.StructField(c, T.StringType(), True) for c in columns[:n_data]]
         + [T.StructField(c, T.BooleanType(), True) for c in columns[n_data:]]
     )
-    return spark.createDataFrame(rows, schema)
+    # An Arrow table plans as a JVM LocalRelation; a list of rows would go
+    # through ``parallelize`` and a Python map, starting Python workers on
+    # every codebook write.
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], pa.string() if i < n_data else pa.bool_())
+            for i in range(len(columns))
+        ],
+        names=columns,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_global_tables(
     spark: SparkSession, raw_content: str
 ) -> dict[str, DataFrame]:
-    """All stacked tables of a global file as small DataFrames."""
+    """All stacked tables of a global file as Arrow-backed DataFrames."""
     out = {}
     for name, fragment in split_global_tables(raw_content).items():
         columns, rows = parse_ruler_fragment(fragment)
